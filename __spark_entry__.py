@@ -531,13 +531,12 @@ def _dd_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the embeddings table: deterministic seed
     codebook (first 8 vectors — the assignment_parity rule, so the
     SQL twin recomputes it from the data alone), zero-shuffle
-    centroid assignment, per-cluster τ-similar dominance verdict.
-    impl="pairs" here (pure cosine_col folds, exactly the twin's
-    shape); the applyInPandas scale impl is pytest-pinned equal."""
+    centroid assignment, per-cluster τ-similar dominance verdict —
+    the grouped applyInPandas kernel, whose left-fold HALF_UP cosines
+    the twin recomputes with ``list_reduce``."""
     embs = _t(spark, sf_dir, "embeddings")
     cents = selection.seed_centroids(embs, n_centroids=8)
-    return selection.semantic_dedup(embs, cents, threshold=0.30,
-                                    impl="pairs")
+    return selection.semantic_dedup(embs, cents, threshold=0.30)
 
 
 def _dd_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -939,7 +938,7 @@ def _hash_bucket_sql(expr: str) -> str:
 
 
 def _nbucket_sql(expr: str, n_buckets: int) -> str:
-    """selection.hashed_grams_col twin: first 4 hex digits of md5 mod
+    """selection gram-bucket twin: first 4 hex digits of md5 mod
     ``n_buckets`` (the `_hash_bucket_sql` nibble decode, parameterized
     modulus)."""
     nib = (lambda i: f"(strpos('0123456789abcdef',"

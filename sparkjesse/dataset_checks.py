@@ -205,14 +205,6 @@ def fixed_histogram(df: DataFrame, value: Column | str, *, lo: float,
     return counts.select("bucket", "n", (F.col("n") / total).alias("p"))
 
 
-def categorical_histogram(df: DataFrame, value: Column | str) -> DataFrame:
-    v = F.col(value) if isinstance(value, str) else value
-    counts = (df.select(v.alias("category")).groupBy("category")
-                .agg(F.count(F.lit(1)).alias("n")))
-    total = F.sum("n").over(Window.partitionBy())
-    return counts.select("category", "n", (F.col("n") / total).alias("p"))
-
-
 def psi_from_histograms(cur: DataFrame, base: DataFrame, key: str = "bucket",
                         *, eps: float = 1e-6) -> float:
     """Population Stability Index between two histograms sharing ``key``:

@@ -50,11 +50,3 @@ def json_equal(a: object, b: object, *, exact_numbers: bool) -> bool:
         if isinstance(a, int) != isinstance(b, int):
             return False
     return a == b
-
-
-def json_equal3(a: object, b: object) -> bool:
-    return json_equal(a, b, exact_numbers=True)
-
-
-def json_equal4(a: object, b: object) -> bool:
-    return json_equal(a, b, exact_numbers=False)

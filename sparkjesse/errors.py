@@ -24,7 +24,7 @@ Our engine re-expresses a violation as a flat row suitable for a Spark
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 DATA_INVALID = "data_invalid"
 SCHEMA_INVALID = "schema_invalid"
@@ -126,20 +126,6 @@ class Violation:
         """Order-insensitive comparison key (jesse emits LIFO order,
         /root/reference/README.md:153-163; we compare canonically sorted)."""
         return (self.error_kind, self.error_type, self.path, self.detail)
-
-
-@dataclass
-class ValidationOutcome:
-    """Result of validating one JSON value against one schema."""
-
-    violations: list[Violation] = field(default_factory=list)
-
-    @property
-    def ok(self) -> bool:
-        return not self.violations
-
-    def sorted_keys(self) -> list[tuple]:
-        return sorted(v.key for v in self.violations)
 
 
 class SchemaNotFound(KeyError):

@@ -101,9 +101,3 @@ def path(df: DataFrame, dotted: str) -> Column:
             return _agg(seg, col)
         col, dtype = _step(col, dtype, seg)
     return col
-
-
-def select_path(df: DataFrame, dotted: str, alias: str | None = None
-                ) -> DataFrame:
-    return df.select(path(df, dotted).alias(alias or dotted.replace(".",
-                                                                    "_")))

@@ -56,10 +56,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import _fold_cosines
 from .textops import tokens_col
 
 __all__ = [
-    "hashed_grams_col", "bucket_counts", "dsir_model",
+    "bucket_counts", "dsir_model",
     "dsir_weight_col", "dsir_weights", "dsir_resample",
     "seed_centroids", "semantic_dedup",
     "bloom_build", "bloom_probe_col", "bloom_contaminated",
@@ -71,66 +72,40 @@ __all__ = [
 # DSIR importance resampling
 # ---------------------------------------------------------------------------
 
-def _bucket_expr(gram: Column, n_buckets: int, salt: str) -> Column:
-    """md5 bucket in [0, n_buckets): first 4 hex digits mod n_buckets
-    (the ``sampling.hash_bucket`` idiom — reproducible in any engine
-    with md5)."""
-    h = F.md5(F.concat(F.lit(salt), gram))
-    return (F.conv(F.substring(h, 1, 4), 16, 10).cast("long")
-            % F.lit(n_buckets))
-
-
-def hashed_grams_col(text_col: Column | str = "text", *,
-                     n_buckets: int = 8192, salt: str = "",
-                     include_unigrams: bool = True) -> Column:
-    """Per-document array of hashed n-gram bucket ids (unigrams +
-    adjacent-bigram strings ``"a b"``), pure column expression.
-
-    DSIR's feature space: a bag of hashed n-grams. 4 md5 hex digits
-    give 65,536 raw values, so ``n_buckets`` must be ≤ 65536 (8192 is
-    the paper-scale default; collisions are part of the model, not an
-    error)."""
-    if not 1 <= n_buckets <= 65536:
-        raise ValueError("n_buckets must be in [1, 65536]")
-    toks = tokens_col(text_col)
-    # adjacent pairs via two shifted slices; n_pairs = size-1 clamped
-    # to 0 so single-token docs yield [] (a descending sequence(1, 0)
-    # here once made element_at(toks, 2) throw on 1-token docs)
-    n_pairs = F.greatest(F.size(toks) - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n_pairs), F.slice(toks, 2, n_pairs),
-        lambda a, b: F.concat_ws(" ", a, b))
-    grams = (F.concat(toks, bigrams) if include_unigrams else bigrams)
-    return F.transform(grams,
-                       lambda g: _bucket_expr(g, n_buckets, salt))
+def _gram_buckets(text: str | None, n_buckets: int, salt: str,
+                  include_unigrams: bool) -> list[int]:
+    """A document's hashed n-gram bucket ids — DSIR's feature space, a
+    bag of hashed n-grams: the ``" "``-split tokens (if
+    ``include_unigrams``) plus adjacent-bigram strings ``"a b"``, each
+    bucketed as the first 4 md5 hex digits of ``salt + gram`` mod
+    ``n_buckets`` (the ``sampling.hash_bucket`` idiom — reproducible in
+    any engine with md5). NULL text has no grams, as DuckDB's
+    ``unnest`` of a NULL list gives none; ``""`` is one empty token.
+    The single gram-hashing rule for both the histogram and the
+    per-document scorer."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    grams = ((toks if include_unigrams else [])
+             + [f"{a} {b}" for a, b in zip(toks, toks[1:])])
+    return [int(hashlib.md5((salt + g).encode()).hexdigest()[:4], 16)
+            % n_buckets for g in grams]
 
 
 def bucket_counts(df: DataFrame, text_col: str = "text", *,
                   n_buckets: int = 8192, salt: str = "",
-                  include_unigrams: bool = True,
-                  impl: str = "arrow") -> DataFrame:
+                  include_unigrams: bool = True) -> DataFrame:
     """Hashed-gram bucket histogram ``(bucket, n)`` for a corpus — the
     sufficient statistic DSIR needs from each side. ONE shuffle,
     map-side combined, ≤ ``n_buckets`` result rows.
 
-    ``impl="arrow"`` (default, the scale path): each partition folds
-    its grams into a dense ``n_buckets`` int64 histogram inside ONE
-    ``mapInPandas`` pass and emits only its nonzero rows — shuffle
-    volume ≤ ``n_buckets`` rows per partition, no per-gram rows ever
-    materialize. ``impl="expr"``: the pure-expression explode twin
-    (engine-portable md5/conv plan; Catalyst evaluates HOF lambdas
-    interpreted per ELEMENT, so the per-gram md5 makes it ~4× slower
-    at equal results — kept as the differential/parity path, same
-    role as ``dedup``'s expression SimHash). Both paths hash with the
-    identical md5-prefix rule and are pytest-pinned equal."""
-    if impl == "expr":
-        grams = hashed_grams_col(text_col, n_buckets=n_buckets,
-                                 salt=salt,
-                                 include_unigrams=include_unigrams)
-        return (df.select(F.explode(grams).alias("bucket"))
-                  .groupBy("bucket").agg(F.count(F.lit(1)).alias("n")))
-    if impl != "arrow":
-        raise ValueError(f"unknown impl: {impl!r}")
+    Each partition folds its grams into a dense ``n_buckets`` int64
+    histogram inside ONE ``mapInPandas`` pass and emits only its
+    nonzero rows — shuffle volume ≤ ``n_buckets`` rows per partition,
+    no per-gram rows ever materialize. 4 md5 hex digits give 65,536
+    raw values, so ``n_buckets`` must be ≤ 65536 (8192 is the
+    paper-scale default; collisions are part of the model, not an
+    error)."""
     if not 1 <= n_buckets <= 65536:
         raise ValueError("n_buckets must be in [1, 65536]")
 
@@ -138,13 +113,9 @@ def bucket_counts(df: DataFrame, text_col: str = "text", *,
         counts = np.zeros(n_buckets, dtype=np.int64)
         for pdf in batches:
             for t in pdf["__text__"]:
-                toks = (t or "").split(" ")
-                grams = (list(toks) if include_unigrams else [])
-                grams += [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-                for g in grams:
-                    counts[int(hashlib.md5(
-                        (salt + g).encode()).hexdigest()[:4], 16)
-                        % n_buckets] += 1
+                for b in _gram_buckets(t, n_buckets, salt,
+                                       include_unigrams):
+                    counts[b] += 1
         nz = np.nonzero(counts)[0]
         yield pd.DataFrame({"bucket": nz.astype(np.int64),
                             "n": counts[nz]})
@@ -197,9 +168,9 @@ def dsir_weight_col(model: dict,
     machinery exactly; the float ``weight`` is pytest-pinned).
 
     Zero shuffle: the ≤ ``n_buckets``-entry model rides in the Arrow
-    UDF closure; gram hashing uses the same md5 scheme as the Spark
-    expression path (``hashed_grams_col``) — md5 is md5 in every
-    engine."""
+    UDF closure; grams hash exactly as in :func:`bucket_counts`
+    (``_gram_buckets``), so NULL text scores ``n_grams`` = 0 and
+    ``weight`` = 0.0."""
     n_buckets = model["n_buckets"]
     salt = model["salt"]
     include_uni = model["include_unigrams"]
@@ -210,11 +181,7 @@ def dsir_weight_col(model: dict,
     def score(texts: pd.Series) -> pd.DataFrame:
         ng, th, rh, w = [], [], [], []
         for t in texts:
-            toks = (t or "").split(" ")
-            grams = (list(toks) if include_uni else [])
-            grams += [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-            idx = [int(hashlib.md5((salt + g).encode()).hexdigest()
-                       [:4], 16) % n_buckets for g in grams]
+            idx = _gram_buckets(t, n_buckets, salt, include_uni)
             ng.append(len(idx))
             th.append(int(sum(int(tgt[i]) for i in idx)))
             rh.append(int(sum(int(raw[i]) for i in idx)))
@@ -296,52 +263,28 @@ def seed_centroids(corpus: DataFrame, *, id_col: str = "vec_id",
                   for r in rows)
 
 
-def _assign_cols(centroids: list, emb_col: str) -> tuple[Column, Column]:
-    """(cell, cent_sim): nearest centroid by cosine (desc sim, asc
-    centroid id tiebreak — the ``assignment_parity`` literal path) and
-    the cosine to it, both rounded to 6 dp for cross-engine
-    determinism. Pure expressions, zero shuffle."""
-    from .similarity import cosine_col
+def _nearest_centroid_cols(centroids: list, emb_col: str):
+    """(cell, cent_sim): nearest centroid by cosine and the cosine to
+    it, as one Arrow-batched pandas UDF scoring against the broadcast
+    centroid matrix (the ``similarity._nearest_cells_udf`` pattern,
+    extended to return the similarity too) — zero shuffle, and the
+    plan stays one UDF node however large the codebook.
 
-    scored = F.array(*[
-        F.struct(
-            (-F.round(cosine_col(
-                F.col(emb_col), F.array(*[F.lit(x) for x in vec])), 6))
-            .alias("negsim"),
-            F.lit(cid).alias("cent_id"))
-        for cid, vec in centroids])
-    best = F.sort_array(scored)[0]
-    return (best.getField("cent_id").cast("long"),
-            -best.getField("negsim"))
-
-
-# expression trees grow linearly with the codebook; past this the
-# broadcast-matrix UDF wins (same crossover similarity.py uses for
-# the IVF coarse quantizer)
-_LITERAL_ASSIGN_MAX = 64
-
-
-def _assign_udf_cols(centroids: list, emb_col: str):
-    """Large-codebook twin of :func:`_assign_cols`: one Arrow-batched
-    matmul against the broadcast centroid matrix (the
-    ``similarity._nearest_cells_udf`` pattern, extended to return the
-    similarity too). Tiebreak identity with the literal path: cosines
-    round to 6 dp BEFORE the argmax, and ``np.argmax`` returns the
-    FIRST maximum — centroids are sorted by cent_id, so ties resolve
-    to the smaller id exactly like the (negsim, cent_id) struct sort
-    (pytest-pinned equal on both paths)."""
-    cids = np.array([c for c, _ in centroids], dtype=np.int64)
-    mat = np.array([v for _, v in centroids], dtype=np.float64)
-    mat_n = mat / np.maximum(
-        np.linalg.norm(mat, axis=1, keepdims=True), 1e-300)
+    Cosines come from ``similarity._fold_cosines`` (left-fold dot,
+    divide twice, HALF_UP to 6 dp — the ``dd_semantic`` oracle's
+    math) and are rounded BEFORE the argmax; ``np.argmax`` returns the
+    FIRST maximum over id-sorted centroids, so ties go to the smaller
+    centroid id. A zero-norm centroid never wins; a zero-norm
+    embedding gets the smallest centroid id and a NULL ``cent_sim``
+    (the ``cosine_col`` contract)."""
+    cents = sorted(centroids, key=lambda c: c[0])
+    cids = np.array([c for c, _ in cents], dtype=np.int64)
+    mat = np.array([v for _, v in cents], dtype=np.float64)
 
     @F.pandas_udf("struct<cell:long, cent_sim:double>")
     def assign(embs: pd.Series) -> pd.DataFrame:
-        E = np.array([np.asarray(e, dtype=np.float64) for e in embs])
-        En = E / np.maximum(
-            np.linalg.norm(E, axis=1, keepdims=True), 1e-300)
-        sims = np.round(En @ mat_n.T, 6)
-        best = np.argmax(sims, axis=1)
+        sims = _fold_cosines(list(embs), mat)
+        best = np.argmax(np.nan_to_num(sims, nan=-np.inf), axis=1)
         return pd.DataFrame(
             {"cell": cids[best],
              "cent_sim": sims[np.arange(len(best)), best]})
@@ -353,98 +296,39 @@ def _assign_udf_cols(centroids: list, emb_col: str):
 def semantic_dedup(df: DataFrame, centroids: list, *,
                    id_col: str = "vec_id",
                    emb_col: str = "embedding",
-                   threshold: float = 0.95,
-                   impl: str = "grouped",
-                   assign: str = "auto") -> DataFrame:
+                   threshold: float = 0.95) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): flag semantically redundant
     embeddings. Each vector is assigned to its nearest centroid
-    (zero-shuffle broadcast-codebook expression); within a cluster, a
-    vector is a duplicate iff some τ-similar cluster-mate is FARTHER
-    from the centroid (SemDeDup keeps the low-centroid-similarity
+    (zero-shuffle broadcast-codebook UDF); within a cluster, a vector
+    is a duplicate iff some τ-similar cluster-mate is FARTHER from the
+    centroid (SemDeDup keeps the low-centroid-similarity
     representative to preserve diversity; ties break to the smaller
-    id). Comparisons use 6-dp-rounded cosines so both impls and the
-    SQL oracle agree bit-for-bit.
+    id). Every cosine is ``similarity._fold_cosines`` (6-dp HALF_UP),
+    so the verdict matches the ``dd_semantic`` SQL oracle
+    bit-for-bit. A zero-norm embedding has NULL ``cent_sim`` and is
+    never a duplicate (its cosines are NULL, never ≥ τ).
 
     Returns ``(id, cell, cent_sim, is_dup)``.
 
-    ``impl="grouped"`` (default, the scale path): ONE shuffle on the
-    cluster id, per-cluster pairwise cosine inside an
-    ``applyInPandas`` batch — O(size²) per cluster, capped by sizing
-    ``n_clusters`` (the paper runs 50k clusters at 100M scale for
-    ~2k-vector clusters). ``impl="pairs"``: the same verdict as a
-    cluster-keyed self-join of pure column expressions — more
-    shuffle-hungry but every operation is engine-portable (the
-    ``dd_semantic`` oracle's path; pytest pins both impls equal).
-
-    ``assign`` picks the centroid-assignment kernel: ``"literal"``
-    (expression tree, engine-portable) for small codebooks,
-    ``"udf"`` (broadcast-matrix Arrow matmul) for the 50k-cluster
-    production codebooks where a literal tree would explode the plan;
-    ``"auto"`` (default) crosses over at ``_LITERAL_ASSIGN_MAX`` (64)
-    centroids. Both kernels round to 6 dp before the argmax and
-    tiebreak to the smaller centroid id (pytest-pinned equal)."""
-    if impl not in ("grouped", "pairs"):
-        raise ValueError(f"unknown impl: {impl!r}")
-    if assign == "auto":
-        assign = ("literal" if len(centroids) <= _LITERAL_ASSIGN_MAX
-                  else "udf")
-    if assign == "literal":
-        cell, cent_sim = _assign_cols(centroids, emb_col)
-    elif assign == "udf":
-        cell, cent_sim = _assign_udf_cols(centroids, emb_col)
-    else:
-        raise ValueError(f"unknown assign: {assign!r}")
+    ONE shuffle on the cluster id, then per-cluster pairwise cosine
+    inside an ``applyInPandas`` batch — O(size²) per cluster, capped by
+    sizing ``n_clusters`` (the paper runs 50k clusters at 100M scale
+    for ~2k-vector clusters)."""
+    cell, cent_sim = _nearest_centroid_cols(centroids, emb_col)
     assigned = df.select(
         F.col(id_col).alias("id"),
         F.col(emb_col).alias("emb"),
         cell.alias("cell"),
         cent_sim.alias("cent_sim"))
 
-    if impl == "pairs":
-        from .similarity import cosine_col
-
-        a = assigned.alias("a")
-        b = (assigned.withColumnRenamed("id", "bid")
-                     .withColumnRenamed("emb", "bemb")
-                     .withColumnRenamed("cent_sim", "bcs").alias("b"))
-        pair_cos = F.round(cosine_col(F.col("a.emb"),
-                                      F.col("b.bemb")), 6)
-        dominated = (
-            a.join(b, on="cell")
-             .where((F.col("a.id") != F.col("bid"))
-                    & (pair_cos >= F.lit(threshold))
-                    & ((F.col("bcs") < F.col("a.cent_sim"))
-                       | ((F.col("bcs") == F.col("a.cent_sim"))
-                          & (F.col("bid") < F.col("a.id")))))
-             .select(F.col("cell"), F.col("a.id").alias("id"))
-             .distinct())
-        return (assigned.join(dominated.withColumn("__dup__",
-                                                   F.lit(True)),
-                              on=["cell", "id"], how="left")
-                .select(F.col("id").alias(id_col), "cell", "cent_sim",
-                        F.coalesce("__dup__", F.lit(False))
-                         .alias("is_dup")))
-
-    import pandas as _pd
-
-    def dedup_cell(pdf: _pd.DataFrame) -> _pd.DataFrame:
-        # rows of one cluster. Vectorized ACROSS PAIRS, looping over
-        # DIMENSIONS (the _cosine_pairs_batch trick): each pair's dot
-        # accumulator sees the exact left-fold IEEE sequence, so the
-        # 6-dp-rounded sims match the per-pair loop this replaced —
-        # which did O(n²) python-level np.dot calls, ~6 s for a
-        # paper-sized 2k-vector cluster. Chunked over rows so peak
-        # memory is CHUNK×n doubles, not n².
+    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        # rows of one cluster, chunked over rows so peak memory is
+        # CHUNK×n doubles, not n²
         cs = pdf["cent_sim"].to_numpy()
         ids = pdf["id"].to_numpy()
         n = len(ids)
         E = np.stack([np.asarray(e, dtype=np.float64)
-                      for e in pdf["emb"]]) if n else np.zeros((0, 1))
-        dim = E.shape[1]
-        sq = np.zeros(n)
-        for d in range(dim):
-            sq += E[:, d] * E[:, d]
-        nrm = np.sqrt(sq)
+                      for e in pdf["emb"]])
         order = np.lexsort((ids, cs))  # (cent_sim, id) ascending
         rank = np.empty(n, dtype=np.int64)
         rank[order] = np.arange(n)
@@ -452,19 +336,13 @@ def semantic_dedup(df: DataFrame, centroids: list, *,
         chunk = 1024
         for s in range(0, n, chunk):
             e = min(s + chunk, n)
-            G = np.zeros((e - s, n))
-            for d in range(dim):
-                G += np.outer(E[s:e, d], E[:, d])
-            denom = np.outer(nrm[s:e], nrm)
-            sim = np.divide(G, denom, out=np.zeros_like(G),
-                            where=denom != 0)  # zero-norm pair -> 0.0
-            hit = np.round(sim, 6) >= threshold
+            hit = _fold_cosines(E[s:e], E) >= threshold  # NaN: False
             hit[np.arange(e - s), np.arange(s, e)] = False  # self
             # only earlier-in-(cent_sim, id)-order mates dominate
             dup[s:e] = (hit & (rank[None, :] < rank[s:e, None])
                         ).any(axis=1)
-        return _pd.DataFrame({"id": ids, "cell": pdf["cell"],
-                              "cent_sim": cs, "is_dup": dup})
+        return pd.DataFrame({"id": ids, "cell": pdf["cell"],
+                             "cent_sim": cs, "is_dup": dup})
 
     out = (assigned.groupBy("cell")
            .applyInPandas(dedup_cell,

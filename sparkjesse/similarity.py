@@ -73,11 +73,10 @@ def _cosine_pairs_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     pairs return null exactly like ``zip_with`` null-poisoning.
     Caveats (documented contract): a null ELEMENT inside an embedding
     arrives from Arrow as NaN and yields NaN where the expression path
-    yields null — don't feed element-null embeddings to the arrow
-    impl. A ZERO-NORM vector yields NULL on both paths: the NaN this
-    kernel computes surfaces as NA through the Float64 extension
-    array, matching ``cosine_col``'s zero-norm CaseWhen guard
-    (test-pinned)."""
+    yields null — don't feed element-null embeddings to this kernel.
+    A ZERO-NORM vector yields NULL on both paths: the NaN this kernel
+    computes surfaces as NA through the Float64 extension array,
+    matching ``cosine_col``'s ``try_divide`` NULL."""
     n = len(a)
     out = np.full(n, np.nan)
     valid = np.empty(n, dtype=bool)
@@ -119,15 +118,9 @@ def cosine_pairs_udf(a: Column, b: Column) -> Column:
     return _COSINE_UDF(a, b)
 
 
-def _pair_cosine(qe: Column, ce: Column, impl: str) -> Column:
-    if impl in ("auto", "arrow"):
-        return cosine_pairs_udf(qe, ce)
-    return cosine_col(qe, ce)
-
-
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, *,
                      id_col: str = "vec_id", emb_col: str = "embedding",
-                     k: int = 5, impl: str = "auto") -> DataFrame:
+                     k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query (cosine desc, neighbor id asc as
     the deterministic tiebreak). Query side is broadcast — the corpus is
     scanned once, map-side, with no corpus shuffle; the only shuffle is
@@ -139,8 +132,8 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, *,
                             F.col(emb_col).alias("__ce__"))
               .join(q, F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id",
-                      F.round(_pair_cosine(F.col("__qe__"), F.col("__ce__"),
-                                           impl), 6)
+                      F.round(cosine_pairs_udf(F.col("__qe__"),
+                                               F.col("__ce__")), 6)
                       .alias("cosine")))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
@@ -168,7 +161,11 @@ def _fold_cosines(emb_rows: Sequence, codebook: np.ndarray) -> np.ndarray:
     ``dot_col`` — numpy's matmul/pairwise summation would differ in the
     last ulp), cosine = dot / |a| / |b| (divide twice, same order), and
     rounding is sign-aware HALF_UP to 6 decimals (Spark/DuckDB
-    ``round`` semantics; ``np.round`` is half-to-even)."""
+    ``round`` semantics; ``np.round`` is half-to-even). A zero-norm
+    operand yields NaN, which crosses Arrow as NULL — the
+    ``cosine_col`` ``try_divide`` contract. The IVF and SemDeDup
+    assignment UDFs and SemDeDup's within-cluster pairs all score
+    through here."""
     E = np.stack([np.asarray(e, dtype=np.float64) for e in emb_rows])
     C = codebook.astype(np.float64)
     n, d = E.shape
@@ -179,7 +176,8 @@ def _fold_cosines(emb_rows: Sequence, codebook: np.ndarray) -> np.ndarray:
         S += E[:, j:j + 1] * C[None, :, j]
         en += E[:, j] * E[:, j]
         cn += C[:, j] * C[:, j]
-    cos = S / np.sqrt(en)[:, None] / np.sqrt(cn)[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = S / np.sqrt(en)[:, None] / np.sqrt(cn)[None, :]
     return np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
 
 
@@ -417,7 +415,7 @@ def assignment_parity(corpus: DataFrame, *, id_col: str = "vec_id",
 def ann_topk_bucketed(queries: DataFrame, corpus: DataFrame, *,
                       id_col: str = "vec_id", emb_col: str = "embedding",
                       k: int = 3, bits: int = 4,
-                      multiprobe: int = 1, impl: str = "auto") -> DataFrame:
+                      multiprobe: int = 1) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign
     bucket, MULTI-PROBED. ``multiprobe=1`` (default) probes the
     query's own bucket plus every Hamming-1 neighbor bucket
@@ -451,8 +449,8 @@ def ann_topk_bucketed(queries: DataFrame, corpus: DataFrame, *,
     scored = (c.join(q, on="bucket")
                .where(F.col("query_id") != F.col("neighbor_id"))
                .select("query_id", "neighbor_id",
-                       F.round(_pair_cosine(F.col("__qe__"),
-                                            F.col("__ce__"), impl),
+                       F.round(cosine_pairs_udf(F.col("__qe__"),
+                                                F.col("__ce__")),
                                6).alias("cosine")))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))

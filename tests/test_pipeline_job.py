@@ -3,13 +3,18 @@ decontaminate -> encode -> range-sorted write, over the sf0.001 table."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "tools")
 
 
 def test_pipeline_job_end_to_end(spark, tmp_path, monkeypatch):
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     out = str(tmp_path / "out")
@@ -52,7 +57,7 @@ def test_pipeline_job_end_to_end(spark, tmp_path, monkeypatch):
 def test_pipeline_job_host_cap_and_redaction(spark, tmp_path, monkeypatch):
     """--url-col adds the host-cap stage; PII injected into two docs is
     redacted in the written output and counted in the stats ledger."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     src = str(tmp_path / "src")
@@ -85,7 +90,7 @@ def test_pipeline_job_host_cap_and_redaction(spark, tmp_path, monkeypatch):
 def test_pipeline_job_epoch_order(spark, tmp_path, monkeypatch):
     """--order epoch:N writes the corpus in the deterministic per-epoch
     training order: shard files concatenate to a rank-sorted stream."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     out = str(tmp_path / "out")
@@ -122,7 +127,7 @@ def test_pipeline_job_epoch_order(spark, tmp_path, monkeypatch):
 def test_pipeline_job_span_dedup_stage(spark, tmp_path, monkeypatch):
     """--span-dedup N strips repeated N-token spans after whole-doc
     dedup; the removal count lands in stats and the funnel holds."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     src = str(tmp_path / "src")
@@ -155,7 +160,7 @@ def test_pipeline_job_span_dedup_stage(spark, tmp_path, monkeypatch):
 def test_pipeline_job_lm_cut_stage(spark, tmp_path, monkeypatch):
     """--lm-keep Q trains a corpus LM and drops the worst-perplexity
     tail; the funnel shrinks and the cut value lands in stats."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     out = str(tmp_path / "out")
@@ -178,7 +183,7 @@ def test_pipeline_job_lm_cut_stage(spark, tmp_path, monkeypatch):
 def test_pipeline_job_bpe_stage(spark, tmp_path, monkeypatch):
     """--bpe N trains the tokenizer on the pipeline output corpus,
     attaches bpe_ids alongside the vocab ids, and persists merges."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     out = str(tmp_path / "out")
@@ -205,7 +210,7 @@ def test_pipeline_job_selection_stages(spark, tmp_path, monkeypatch):
     (no false negatives), DSIR shrinks the corpus to ~the requested
     fraction, and SemDeDup prunes embedding near-dups when the input
     carries an embedding column."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     src = str(tmp_path / "src")
@@ -246,3 +251,30 @@ def test_pipeline_job_selection_stages(spark, tmp_path, monkeypatch):
     assert stats["after_semdedup"] < stats["after_dsir"]
     assert stats["written"] == stats["after_semdedup"]
     assert spark.read.parquet(out + "/docs").count() == stats["written"]
+
+
+@pytest.mark.parametrize("extra, message", [
+    (["--semdedup", "4"], "requires an 'embedding' column"),
+    (["--dsir-keep", "0.5"], "--dsir-keep requires --dsir-target"),
+    (["--dsir-target", "TGT"], "--dsir-target requires --dsir-keep"),
+    (["--dsir-target", "TGT", "--dsir-keep", "1.0"], "must be in (0, 1)"),
+    (["--dsir-target", "TGT", "--dsir-keep", "0"], "must be in (0, 1)"),
+])
+def test_pipeline_job_fails_fast(spark, sf_dir, tmp_path, monkeypatch,
+                                 capsys, extra, message):
+    """A requested stage that cannot run is an error, not a silent
+    skip: the job exits non-zero with a message, before any output."""
+    sys.path.insert(0, TOOLS)
+    import pipeline_job
+
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(sys, "argv", [
+        "pipeline_job.py",
+        "--input", f"{sf_dir}/documents.parquet",
+        "--output", out] + [str(tmp_path) if a == "TGT" else a
+                            for a in extra])
+    with pytest.raises(SystemExit) as exc:
+        pipeline_job.main()
+    assert exc.value.code != 0
+    assert message in capsys.readouterr().err
+    assert not os.path.exists(out)

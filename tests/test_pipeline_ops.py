@@ -804,12 +804,10 @@ def test_cosine_pairs_udf_bit_identical_to_expression(spark):
     """The vectorized pairwise cosine must equal the expression fold
     BIT-FOR-BIT: it loops over dimensions so each pair's accumulator
     sees the same IEEE-double op sequence as the left fold. Pins
-    random float32 vectors (several dims), row nulls, and
-    length-mismatched pairs (null-poisoned in the expression).
-    Zero-norm vectors are NOT compared: under Spark 4 ANSI mode the
-    expression path RAISES DIVIDE_BY_ZERO while the UDF returns NaN —
-    the UDF is the more forgiving of the two (documented in the
-    docstring)."""
+    random float32 vectors (several dims), row nulls,
+    length-mismatched pairs (null-poisoned in the expression), and a
+    zero-norm vector (NULL on both: ``try_divide`` in the expression,
+    NaN → NA in the UDF)."""
     import random
     rnd = random.Random(7)
     rows = []
@@ -819,7 +817,8 @@ def test_cosine_pairs_udf_bit_identical_to_expression(spark):
                      [rnd.uniform(-2, 2) for _ in range(d)],
                      [rnd.uniform(-2, 2) for _ in range(d)]))
     rows += [("nullrow", None, [1.0] * 4),
-             ("mismatch", [1.0] * 4, [1.0] * 5)]
+             ("mismatch", [1.0] * 4, [1.0] * 5),
+             ("zeronorm", [0.0] * 4, [1.0] * 4)]
     df = spark.createDataFrame(
         rows, "id string, a array<float>, b array<float>")
     got = {r["id"]: (r["e"], r["u"]) for r in df.select(
@@ -827,26 +826,13 @@ def test_cosine_pairs_udf_bit_identical_to_expression(spark):
         similarity.cosine_col(F.col("a"), F.col("b")).alias("e"),
         similarity.cosine_pairs_udf(F.col("a"), F.col("b")).alias("u"))
         .collect()}
+    assert got["zeronorm"] == (None, None)
     for key, (e, u) in got.items():
         if e is None or (isinstance(e, float) and math.isnan(e)):
             assert u is None or (isinstance(u, float) and math.isnan(u)), \
                 (key, e, u)
         else:
             assert e == u and str(e) == str(u), (key, e, u)
-
-
-def test_brute_force_topk_impls_agree(spark):
-    import random
-    rnd = random.Random(11)
-    vecs = [(f"v{i}", [rnd.uniform(-1, 1) for _ in range(16)])
-            for i in range(60)]
-    df = spark.createDataFrame(vecs, "vec_id string, embedding array<float>")
-    q = df.limit(5)
-    a = sorted(map(tuple, similarity.brute_force_topk(
-        q, df, k=4, impl="expr").collect()))
-    b = sorted(map(tuple, similarity.brute_force_topk(
-        q, df, k=4, impl="arrow").collect()))
-    assert a == b
 
 
 # -- product quantization ----------------------------------------------------

@@ -154,10 +154,6 @@ def test_bucket_counts_arrow_single_exchange_no_explode(spark):
     plan = _plan(selection.bucket_counts(docs, n_buckets=256))
     assert "Generate" not in plan, plan[:2000]
     assert plan.count("Exchange") == 1, plan[:2000]
-    # the expression twin is the explode plan, zero Python
-    plan_e = _plan(selection.bucket_counts(docs, n_buckets=256,
-                                           impl="expr"))
-    assert "Generate" in plan_e, plan_e[:2000]
 
 
 def test_sampling_zero_shuffle_and_pruned_scan(spark):

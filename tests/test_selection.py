@@ -28,8 +28,10 @@ def embs(spark, sf_dir):
 # DSIR
 # ---------------------------------------------------------------------------
 
-def _local_grams(text: str, include_uni: bool = True) -> list[str]:
-    toks = (text or "").split(" ")
+def _local_grams(text: str | None, include_uni: bool = True) -> list[str]:
+    if text is None:
+        return []
+    toks = text.split(" ")
     grams = list(toks) if include_uni else []
     grams += [f"{a} {b}" for a, b in zip(toks, toks[1:])]
     return grams
@@ -121,93 +123,62 @@ def test_dsir_weight_zero_shuffle_plan(spark, docs):
     assert "Exchange" not in plan
 
 
-def test_bucket_counts_impls_agree(spark, docs):
-    # the Arrow per-partition histogram (scale path) and the
-    # pure-expression explode twin must produce identical histograms
-    n_buckets = 512
-    arrow = {r["bucket"]: r["n"]
-             for r in sel.bucket_counts(docs, n_buckets=n_buckets,
-                                        impl="arrow").collect()}
-    expr = {r["bucket"]: r["n"]
-            for r in sel.bucket_counts(docs, n_buckets=n_buckets,
-                                       impl="expr").collect()}
-    assert arrow == expr
-    with pytest.raises(ValueError):
-        sel.bucket_counts(docs, impl="nope")
-
-
 def test_hashed_grams_edge_docs(spark):
-    # single-token and empty docs: no bigrams, never a crash (a
-    # descending sequence(1, 0) once made element_at throw here);
-    # both the expression path and both bucket_counts impls agree
-    # with the local hashlib twin
+    # single-token, empty and NULL docs: no bigrams, never a crash (a
+    # descending sequence(1, 0) once made element_at throw on 1-token
+    # docs); NULL text contributes no grams — n_grams 0, weight 0.0,
+    # as DuckDB's unnest gives in sel_dsir — and the histogram and the
+    # per-doc scorer agree with the local hashlib twin
     n_buckets = 64
     df = spark.createDataFrame(
-        [("a", "solo"), ("b", ""), ("c", "two words")],
+        [("a", "solo"), ("b", ""), ("c", "two words"), ("d", None)],
         "doc_id string, text string")
-    got = {r["doc_id"]: list(r["bk"]) for r in df.select(
-        "doc_id",
-        sel.hashed_grams_col("text", n_buckets=n_buckets).alias("bk"))
-        .collect()}
     want = {r["doc_id"]: [_local_bucket(g, n_buckets)
                           for g in _local_grams(r["text"])]
             for r in df.collect()}
-    assert got == want
-    for impl in ("arrow", "expr"):
-        hist = {r["bucket"]: r["n"]
-                for r in sel.bucket_counts(df, n_buckets=n_buckets,
-                                           impl=impl).collect()}
-        flat: dict[int, int] = {}
-        for bks in want.values():
-            for b in bks:
-                flat[b] = flat.get(b, 0) + 1
-        assert hist == flat, impl
-
-
-def test_hashed_grams_spark_expression_matches_python_hash(spark, docs):
-    # the Spark expression path (conv/substring/md5) and the pandas
-    # UDF path (hashlib) must agree gram-for-gram
-    n_buckets = 512
-    got = docs.select(
-        "doc_id",
-        sel.hashed_grams_col("text", n_buckets=n_buckets)
-        .alias("bk")).collect()
-    for r in got[:50]:
-        want = [_local_bucket(g, n_buckets)
-                for g in _local_grams(
-                    docs.where(F.col("doc_id") == r["doc_id"])
-                    .collect()[0]["text"])]
-        assert list(r["bk"]) == want
+    assert want["d"] == []
+    hist = {r["bucket"]: r["n"]
+            for r in sel.bucket_counts(df, n_buckets=n_buckets)
+            .collect()}
+    flat: dict[int, int] = {}
+    for bks in want.values():
+        for b in bks:
+            flat[b] = flat.get(b, 0) + 1
+    assert hist == flat
+    model = sel.dsir_model(df, df, n_buckets=n_buckets)
+    got = {r["doc_id"]: r for r in sel.dsir_weights(df, model).collect()}
+    for doc_id, bks in want.items():
+        assert got[doc_id]["n_grams"] == len(bks), doc_id
+        assert got[doc_id]["raw_hits"] == sum(
+            int(model["raw"][b]) for b in bks), doc_id
+    assert got["d"]["weight"] == 0.0
 
 
 # ---------------------------------------------------------------------------
 # SemDeDup
 # ---------------------------------------------------------------------------
 
-def test_semantic_dedup_impls_agree(spark, embs):
-    cents = sel.seed_centroids(embs, n_centroids=8)
-    got_g = sel.semantic_dedup(embs, cents, threshold=0.8,
-                               impl="grouped")
-    got_p = sel.semantic_dedup(embs, cents, threshold=0.8,
-                               impl="pairs")
-    rows_g = sorted((r["vec_id"], r["cell"], round(r["cent_sim"], 6),
-                     r["is_dup"]) for r in got_g.collect())
-    rows_p = sorted((r["vec_id"], r["cell"], round(r["cent_sim"], 6),
-                     r["is_dup"]) for r in got_p.collect())
-    assert rows_g == rows_p
-
-
 def test_semantic_dedup_flags_planted_near_dups(spark, embs):
     # plant exact copies: every copy pair is cosine 1.0, so one of
-    # each pair must be flagged (the farther-from-centroid one stays)
+    # each pair must be flagged (the farther-from-centroid one stays).
+    # Two all-zero embeddings are identical too, but zero-norm cosines
+    # are NULL: NULL cent_sim, never a duplicate
     base = embs.limit(20)
     copies = base.select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         "embedding", "label")
-    df = base.unionByName(copies)
+    zeros = base.limit(2).select(
+        (F.col("vec_id") + 200000).alias("vec_id"),
+        F.transform("embedding", lambda x: x * 0).alias("embedding"),
+        "label")
+    df = base.unionByName(copies).unionByName(zeros)
     cents = sel.seed_centroids(df, n_centroids=4)
     out = sel.semantic_dedup(df, cents, threshold=0.999999)
     rows = {r["vec_id"]: r for r in out.collect()}
+    zero_rows = [r for i, r in rows.items() if i >= 200000]
+    assert len(zero_rows) == 2
+    for r in zero_rows:
+        assert r["cent_sim"] is None and not r["is_dup"]
     for r in base.collect():
         a, b = rows[r["vec_id"]], rows[r["vec_id"] + 100000]
         assert a["cell"] == b["cell"]
@@ -235,33 +206,16 @@ def test_semantic_dedup_keeps_farthest_from_centroid(spark, embs):
                 assert not r["is_dup"]
 
 
-def test_semantic_dedup_assignment_kernels_agree(spark, embs):
-    """literal-expression vs broadcast-matrix-UDF centroid assignment
-    must agree cell-for-cell and sim-for-sim (the udf path is what a
-    50k-cluster production codebook uses; the literal path is what
-    the dd_semantic oracle pins)."""
-    cents = sel.seed_centroids(embs, n_centroids=8)
-    lit = sel.semantic_dedup(embs, cents, threshold=0.8,
-                             assign="literal")
-    udf = sel.semantic_dedup(embs, cents, threshold=0.8,
-                             assign="udf")
-    rows_l = sorted((r["vec_id"], r["cell"], round(r["cent_sim"], 6),
-                     r["is_dup"]) for r in lit.collect())
-    rows_u = sorted((r["vec_id"], r["cell"], round(r["cent_sim"], 6),
-                     r["is_dup"]) for r in udf.collect())
-    assert rows_l == rows_u
-
-
 def test_seed_centroids_fail_fast(spark, embs):
     with pytest.raises(ValueError):
         sel.seed_centroids(embs.limit(3), n_centroids=8)
 
 
 def test_semantic_dedup_assignment_zero_shuffle(spark, embs):
-    # the assignment stage (before the cluster-keyed stage) is a pure
-    # expression; the grouped impl's ONLY exchange is the cell one
+    # the assignment stage (before the cluster-keyed stage) is a
+    # zero-shuffle map; the ONLY exchange is the cell one
     cents = sel.seed_centroids(embs, n_centroids=8)
-    plan = (sel.semantic_dedup(embs, cents, impl="grouped")
+    plan = (sel.semantic_dedup(embs, cents)
             ._jdf.queryExecution().executedPlan().toString())
     assert plan.count("Exchange") == 1
 

@@ -31,7 +31,7 @@ The standard LLM data-prep chain, every stage a sparkjesse operator:
      most-natural Q quantile under a corpus-trained bigram LM;
   5.7. (opt-in, ``--semdedup K``) SemDeDup semantic near-dup pruning
      (``selection.semantic_dedup`` over a
-     ``similarity.kmeans_codebook``) when the input carries an
+     ``similarity.kmeans_codebook``); the input must carry an
      ``embedding`` column;
   6. PII redaction (``scrub.redact_pii``) with an aggregate redaction
      count in the stats ledger — after dedup (identical PII spans must
@@ -101,9 +101,9 @@ def main() -> None:
                     help="parquet path of a trusted target corpus; "
                          "with --dsir-keep, importance-resample the "
                          "corpus toward it (selection.dsir_*)")
-    ap.add_argument("--dsir-keep", type=float, default=0.0, metavar="F",
-                    help="fraction kept by DSIR Gumbel top-k "
-                         "resampling (requires --dsir-target)")
+    ap.add_argument("--dsir-keep", type=float, default=None, metavar="F",
+                    help="fraction in (0, 1) kept by DSIR Gumbel "
+                         "top-k resampling (requires --dsir-target)")
     ap.add_argument("--semdedup", type=int, default=0, metavar="K",
                     help="opt-in SemDeDup with a K-cluster k-means "
                          "codebook (requires an 'embedding' column "
@@ -115,6 +115,13 @@ def main() -> None:
                          "training order for epoch N via "
                          "sampling.epoch_shuffle)")
     args = ap.parse_args()
+    # misconfigured stages fail fast instead of being skipped silently
+    if args.dsir_keep is not None and not args.dsir_target:
+        ap.error("--dsir-keep requires --dsir-target")
+    if args.dsir_target and args.dsir_keep is None:
+        ap.error("--dsir-target requires --dsir-keep")
+    if args.dsir_keep is not None and not 0.0 < args.dsir_keep < 1.0:
+        ap.error(f"--dsir-keep must be in (0, 1), got {args.dsir_keep}")
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -125,6 +132,8 @@ def main() -> None:
     spark = SparkSession.builder.appName("sparkjesse-pipeline") \
         .getOrCreate()
     docs = spark.read.parquet(args.input)
+    if args.semdedup > 0 and "embedding" not in docs.columns:
+        ap.error("--semdedup requires an 'embedding' column in --input")
     stats: dict = {"input": docs.count()}
 
     # 1. reproducible sample
@@ -213,7 +222,7 @@ def main() -> None:
     # map-side-combined aggregations), scoring is a zero-shuffle
     # Arrow-UDF map, and the Gumbel-top-k cut is one approx-percentile
     # aggregate + a filter — the corpus never joins or shuffles
-    if args.dsir_target and 0.0 < args.dsir_keep < 1.0:
+    if args.dsir_target:
         target = spark.read.parquet(args.dsir_target)
         dsir = selection.dsir_model(target, docs)
         docs = selection.dsir_resample(docs, dsir, args.dsir_keep,
@@ -244,7 +253,7 @@ def main() -> None:
     # codebook map, the pairwise check shuffles once on the cluster
     # id, and survivors anti-join the dup-id set (same shape as the
     # SimHash stage-4 drop; AQE broadcasts it when small)
-    if args.semdedup > 0 and "embedding" in docs.columns:
+    if args.semdedup > 0:
         from sparkjesse import similarity
         cb = similarity.kmeans_codebook(
             docs, id_col="doc_id", n_centroids=args.semdedup)
